@@ -75,7 +75,7 @@ _SCORE_ROW_BYTES = 48
 
 def _size_bytes(v: str) -> int:
     """Parse a Spark size conf value ('-1', '10485760', '10485760b',
-    '64MB', '1g') to bytes."""
+    '64MB', '1g') to bytes; raise ValueError on anything else."""
     s = v.strip().lower()
     mult = 1
     for suffix, m in (
@@ -86,10 +86,7 @@ def _size_bytes(v: str) -> int:
         if s.endswith(suffix):
             s, mult = s[: -len(suffix)], m
             break
-    try:
-        return int(float(s) * mult)
-    except ValueError:
-        return -1
+    return int(float(s) * mult)
 
 # Telemetry from the most recent authority_scores call on this driver
 # (the LAST_CC_TELEMETRY pattern): {"calls": monotone counter,
@@ -332,19 +329,17 @@ def authority_scores(
     # wsum Observation), so the action count is unchanged; the
     # broadcast regime keeps the historical zero-collect/count
     # contract its pytest pins.
+    spark = edges.sparkSession
     try:
-        bcast = _size_bytes(
-            edges.sparkSession.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold"
-            )
-        )
-    except Exception:  # noqa: BLE001 — unreadable conf: assume default
+        bcast = _size_bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
+    except Exception:  # noqa: BLE001 — unreadable or unparseable: Spark's default
         bcast = 10 << 20
     exchange_free = bcast <= 0 or n_nodes * _SCORE_ROW_BYTES > bcast
     if exchange_free:
-        iter_par = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+        try:
+            iter_par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except Exception:  # noqa: BLE001 — unreadable or non-numeric ("auto")
+            iter_par = spark.sparkContext.defaultParallelism
         ed = (
             ed_src.repartition(iter_par, "src")
             .sortWithinPartitions("src")
@@ -430,6 +425,11 @@ def authority_scores(
             obs = Observation(f"authority_guard_it{it}")
             nxt = nxt.observe(obs, F.max("score").alias("mx"))
         scores = _materialize(nxt)
+    if exchange_free and eager_materialize:
+        # the final scores are checkpointed and the result joins only
+        # `deg`, so nothing reads the cached edge table any more; the lazy
+        # persist() leg still reads it through the scores' lineage
+        ed.unpersist(blocking=False)
     LAST_AUTHORITY_TELEMETRY["dynamic_checks"] = dynamic_checks
     out_deg = deg.select(F.col("src").alias(id_col), "deg")
     return scores.join(out_deg, id_col, "left").select(

@@ -17,20 +17,24 @@ Stage map (reference process boundary -> here a function call):
 Config keys mirror ``test/test_experiment/config/candia.yaml`` names, so a
 reference experiment file drives this pipeline unchanged.
 
-Scale: stages 1-4 are narrow transforms + two keyed shuffles (slice key,
-cycle/ppm grouping); stage 5 is an embarrassingly parallel applyInPandas
-fleet (one task per slice — the unit the reference schedules on GPUs);
-6-9 are dimension-sized. Natural materialization barriers (parquet
-checkpoints) sit after slicing and after decomposition — both shrink or
-re-key the data, exactly where the reference writes its stage files.
+Scale: stages 1-3 are narrow transforms plus one keyed shuffle that writes
+the slice store (the one materialization barrier, where the reference
+writes its slice files); stage 4 is one grouped apply over the slice key
+(one task per slice builds that slice's whole tensor, as the reference's
+per-slice process does); stage 5 is an embarrassingly parallel
+applyInPandas fleet (one task per slice — the unit the reference
+schedules on GPUs); 6-9 are dimension-sized.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from candia_spark.operators.kernels import (
     count_time_mode_peaks,
@@ -40,15 +44,10 @@ from candia_spark.operators.relational import (
     adjust_overlapping_windows,
     bucketize,
     cross_index,
-    deterministic_id,
     explode_index,
     groupwise_argmax,
-    two_level_count_filter,
 )
-from candia_spark.operators.sequential import (
-    assign_scan_cycles,
-    greedy_ppm_partition,
-)
+from candia_spark.operators.sequential import greedy_partition_starts
 
 
 @dataclass
@@ -136,69 +135,144 @@ def slice_scan_map(
 
 # --- stage 4: tensorize (W3 + W4 + A1 + A5/J4 + J8) -----------------------
 
+# Points up to this long after a sample's last MS1 scan still belong to its
+# last cycle (the reference's right-open pd.cut tail,
+# generate_slice_tensor.py:99-145).
+CYCLE_TAIL_SEC = 0.1
+
+
+def _slice_tensor(
+    key: tuple, pdf: pd.DataFrame, tol_ppm: float, min_points: int
+) -> pd.DataFrame:
+    """Stage 4 on one slice's points (``sample, level, rt, mz,
+    intensity``): its tensor cells, each carrying the ``(level,
+    mz_partition_start)`` that its ``mz_idx`` stands for."""
+    level = pdf["level"].to_numpy()
+    rt = pdf["rt"].to_numpy()
+    mz = pdf["mz"].to_numpy()
+    intensity = pdf["intensity"].to_numpy(dtype=np.float64)
+    samples, sid = np.unique(pdf["sample"].to_numpy(), return_inverse=True)
+
+    # W3: backward as-of onto the sample's sorted distinct MS1 times (the
+    # marker wins a tie); points before the first marker or past the tail
+    # of the last one belong to no cycle
+    cycle = np.full(len(pdf), -1, dtype=np.int64)
+    for s in range(len(samples)):
+        rows = np.flatnonzero(sid == s)
+        t = rt[rows]
+        markers = np.unique(t[level[rows] == 1])
+        if markers.size:
+            c = np.searchsorted(markers, t, side="right") - 1
+            c[t > markers[-1] + CYCLE_TAIL_SEC] = -1
+            cycle[rows] = c
+    binned = cycle >= 0
+    level, mz, intensity, sid, cycle = (
+        a[binned] for a in (level, mz, intensity, sid, cycle)
+    )
+
+    # W4: greedy ppm partitions over the sorted distinct m/z of each level
+    start = np.empty(len(mz))
+    for lv in np.unique(level):
+        rows = np.flatnonzero(level == lv)
+        values, inv = np.unique(mz[rows], return_inverse=True)
+        start[rows] = np.asarray(greedy_partition_starts(values.tolist(), tol_ppm))[inv]
+
+    # A5/J4: keep a partition when some sample has >= min_points in it
+    parts, pid = np.unique(
+        np.rec.fromarrays([level, start], names="level,start"), return_inverse=True
+    )
+    counts = np.zeros((len(parts), len(samples)), dtype=np.int64)
+    np.add.at(counts, (pid, sid), 1)
+    kept_parts = counts.max(axis=1, initial=0) >= min_points
+    keep = kept_parts[pid]
+    if not keep.any():
+        return pd.DataFrame(
+            columns=[
+                *pdf.columns[: len(key)],
+                *("sample_no", "cycle", "mz_idx", "intensity", "level", "mz_partition_start"),
+            ]
+        )
+
+    # J8/W6: dense ids within the slice, in sample-name and (level,
+    # partition start) order
+    mz_idx = (np.cumsum(kept_parts) - 1)[pid[keep]]
+    present = np.zeros(len(samples), dtype=bool)
+    present[sid[keep]] = True
+    sample_no = (np.cumsum(present) - 1)[sid[keep]]
+    cycle = cycle[keep]
+
+    # A1: one summed intensity per (sample_no, cycle, mz_idx) cell
+    n_cycles, n_mz = int(cycle.max()) + 1, int(kept_parts.sum())
+    cells, inv = np.unique((sample_no * n_cycles + cycle) * n_mz + mz_idx, return_inverse=True)
+    sample_cycle, cell_mz = np.divmod(cells, n_mz)
+    dim = parts[kept_parts][cell_mz]
+    out = pd.DataFrame(
+        {
+            "sample_no": sample_cycle // n_cycles,
+            "cycle": sample_cycle % n_cycles,
+            "mz_idx": cell_mz,
+            "intensity": np.bincount(inv, weights=intensity[keep]),
+            "level": dim["level"],
+            "mz_partition_start": dim["start"],
+        }
+    )
+    for i, value in enumerate(key):
+        out.insert(i, pdf.columns[i], value)
+    return out
+
+
 def tensorize_slices(
     sliced: DataFrame,
     mass_tol_ppm: float,
     min_tensor_points: int = 5,
 ) -> tuple[DataFrame, DataFrame]:
     """Long-format slice tensors: one row per (slice, sample_no, cycle,
-    mz_idx) with summed intensity (generate_slice_tensor.py:67-178).
+    mz_idx) with summed intensity (generate_slice_tensor.py:67-233), and
+    the m/z dimension (slice, level, mz_partition_start, mz_idx).
 
-    - cycles: per (slice, sample), points binned by the sample's MS1
-      acquisition times (W3; right-open with the reference's +0.1s tail)
-    - m/z partitions: greedy ppm scan per (slice, level) (W4)
+    One grouped apply over the slice key builds each slice's tensor in a
+    single task, in the reference's order:
+
+    - cycles: per sample, points binned by the sample's MS1 acquisition
+      times (W3; backward as-of, right-open with a ``CYCLE_TAIL_SEC`` tail)
+    - m/z partitions: ``greedy_partition_starts`` over the sorted distinct
+      m/z of each MS level, after cycle binning (W4)
     - partition filter: keep partitions where some sample has >=
       ``min_tensor_points`` points (A5/J4)
     - sample_no: ordinal of the sorted distinct sample names (J8/W9)
-    - mz_idx: ordinal of (level, partition_start) within the slice (W6)
+    - mz_idx: ordinal of (level, partition_start) (W6)
+
+    Both ids are dense from 0 within each slice, so they line up with the
+    per-slice ``row_idx`` of the decomposition's factors.
+
+    Scale: one shuffle on the slice key, and nothing is collected. A slice is
+    bounded by one isolation window times one RT window, the unit the
+    reference holds in memory per process.
     """
     slice_cols = ["swath_lower_adjusted", "rt_window"]
-
-    ms1_markers = (
-        sliced.filter(F.col("level") == 1)
-        .select(*slice_cols, "sample", F.col("rt").alias("t"))
-        .distinct()
-    )
-    with_cycles = assign_scan_cycles(
-        sliced.withColumnRenamed("rt", "t"),
-        time_col="t",
-        group_cols=slice_cols + ["sample"],
-        marker_times=ms1_markers,
-        tail=0.1,
+    cells_schema = StructType(
+        [sliced.schema[c] for c in slice_cols]
+        + [
+            StructField("sample_no", LongType()),
+            StructField("cycle", LongType()),
+            StructField("mz_idx", LongType()),
+            StructField("intensity", DoubleType()),
+            sliced.schema["level"],
+            StructField("mz_partition_start", DoubleType()),
+        ]
     )
 
-    parted = greedy_ppm_partition(
-        with_cycles,
-        "mz",
-        slice_cols + ["level"],
-        tol_ppm=mass_tol_ppm,
-        out_col="mz_partition_start",
+    def tensorize(key, pdf):
+        return _slice_tensor(key, pdf, mass_tol_ppm, min_tensor_points)
+
+    cells = (
+        sliced.select(*slice_cols, "sample", "level", "rt", "mz", "intensity")
+        .groupBy(*slice_cols)
+        .applyInPandas(tensorize, schema=cells_schema)
     )
-
-    kept = two_level_count_filter(
-        parted,
-        inner_key=slice_cols + ["level", "mz_partition_start", "sample"],
-        outer_key=slice_cols + ["level", "mz_partition_start"],
-        min_count=min_tensor_points,
-    )
-
-    samples = deterministic_id(
-        kept.select(*slice_cols, "sample").distinct(),
-        order_cols=["sample"],
-        id_col="sample_no",
-    ).select(*slice_cols, "sample", "sample_no")
-    mz_dim = deterministic_id(
-        kept.select(*slice_cols, "level", "mz_partition_start").distinct(),
-        order_cols=["level", "mz_partition_start"],
-        id_col="mz_idx",
-    ).select(*slice_cols, "level", "mz_partition_start", "mz_idx")
-
-    return (
-        kept.join(samples, on=slice_cols + ["sample"])
-        .join(mz_dim, on=slice_cols + ["level", "mz_partition_start"])
-        .groupBy(*slice_cols, "sample_no", "cycle", "mz_idx")
-        .agg(F.sum("intensity").alias("intensity"))
-    ), mz_dim
+    tensor_long = cells.select(*slice_cols, "sample_no", "cycle", "mz_idx", "intensity")
+    mz_dim = cells.select(*slice_cols, "level", "mz_partition_start", "mz_idx").distinct()
+    return tensor_long, mz_dim
 
 
 # --- stage 5: decomposition (K1 + K2 + F5 + A10) --------------------------

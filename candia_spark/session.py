@@ -9,8 +9,9 @@ applies scale-aware defaults everywhere:
   itself warns about (split_csv_maps_to_slices.py:90-92).
 - Arrow execution on for all pandas UDF exchange (the grouped numeric
   kernels stream through Arrow batches, not pickled rows).
-- Shuffle partitions sized to cores locally; on a real cluster the AQE
-  coalescing makes the static number mostly irrelevant.
+- Shuffle partitions sized to the session's cores locally
+  (``SPARK_GRAFT_CPUS`` when numeric, else the machine's); on a real
+  cluster the AQE coalescing makes the static number mostly irrelevant.
 """
 
 from __future__ import annotations
@@ -18,6 +19,16 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_shuffle_partitions() -> int:
+    """``spark.sql.shuffle.partitions`` when the caller passes none: a
+    numeric ``SPARK_GRAFT_CPUS`` (the cores ``local[...]`` runs on), else
+    every core of the machine."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if cpus.isdigit() and int(cpus) > 0:
+        return int(cpus)
+    return os.cpu_count() or 32
 
 
 def get_spark(
@@ -36,7 +47,7 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = os.cpu_count() or 32
+        shuffle_partitions = default_shuffle_partitions()
 
     builder = (
         SparkSession.builder.appName(app_name)

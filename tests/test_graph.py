@@ -335,3 +335,72 @@ def test_personalized_authority_seed_restart(spark):
     assert out[0] == (3 * INIT) // 20  # 150e9 restart, no in-mass
     assert out[1] == out[2] == (17 * INIT) // 40  # 425e9
     assert out[9] == 0
+
+
+def _cached_rdds(sc) -> int:
+    """Persistent RDDs held by DataFrame caches. Local checkpoints register
+    as persistent too, but the ContextCleaner frees those on GC."""
+    rdds = sc._jsc.getPersistentRDDs()
+    return sum(1 for k in rdds.keySet() if not rdds[k].rdd().isLocallyCheckpointed())
+
+
+def _ring(spark, n=50):
+    return _graph(spark, [(i, (i * 7 + 1) % n) for i in range(n)], range(n))
+
+
+def test_authority_exchange_free_releases_edge_cache(spark):
+    """The exchange-free regime caches the keyed edge table for its
+    iterations and must drop it before returning."""
+    edges, nodes = _ring(spark)
+    want = sorted(authority_scores(edges, nodes, iters=2).collect())
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        before = _cached_rdds(spark.sparkContext)
+        out = authority_scores(edges, nodes, iters=2)
+        after = _cached_rdds(spark.sparkContext)
+        got = sorted(out.collect())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert after == before
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "threshold, regime",
+    [(None, "broadcast"), ("10 megs", "broadcast"), ("-1", "exchange_free")],
+)
+def test_authority_conf_fallbacks(spark, monkeypatch, threshold, regime):
+    """An unreadable and an unparseable broadcast threshold both mean
+    Spark's default (the broadcast regime on a small graph); a
+    non-numeric shuffle.partitions falls back to the default parallelism
+    instead of failing the exchange-free regime."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    edges, nodes = _ring(spark)
+    want = sorted(authority_scores(edges, nodes, iters=2).collect())
+    real_get = RuntimeConfig.get
+
+    def fake_get(self, key, *args, **kwargs):
+        if key == "spark.sql.autoBroadcastJoinThreshold":
+            if threshold is None:
+                raise RuntimeError("conf unavailable")
+            return threshold
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *args, **kwargs)
+
+    persisted = []
+    frame = type(edges)
+    real_persist = frame.persist
+
+    def spy_persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(RuntimeConfig, "get", fake_get)
+    monkeypatch.setattr(frame, "persist", spy_persist)
+    got = sorted(authority_scores(edges, nodes, iters=2).collect())
+    monkeypatch.undo()
+    assert ("exchange_free" if persisted else "broadcast") == regime
+    assert got == want
